@@ -1,7 +1,8 @@
 # Developer entry points (mirrors the reference repo's Makefile role).
 
 .PHONY: test test-fast parity parity-all parity-sf01 parity-hostile bench smoke \
-        fetch-grid ulp-canary close scale-data scale-curve parity-scale
+        fetch-grid ulp-canary close scale-data scale-curve parity-scale \
+        bench-etl bench-stream bench-trace
 
 fetch-grid:      ## best-effort: pull the real LINZ NTv2 grid when network exists
 	-python tools/fetch_linz_grid.py
@@ -76,6 +77,17 @@ parity-scale:    ## full oracle sweep at the sf1 clone (r12) — 10x sf0.1
 
 bench:           ## headline queries at sf0.1, one JSON line
 	python bench.py
+
+# the benchmark of record (BENCHMARK.json, perfbench/README.md): one
+# seeded run each, the result JSON on the last stdout line
+bench-etl:       ## etl_products workload: cli.run passes, end-to-end metrics
+	python3 perfbench/run.py --workload etl_products --seed 1 --seconds 10 --trace 0
+
+bench-stream:    ## stream_replay workload: availableNow replays, end-to-end metrics
+	python3 perfbench/run.py --workload stream_replay --seed 1 --seconds 10 --trace 0
+
+bench-trace:     ## layer probe: every per-layer metric, spans in .perfbench/trace/
+	python3 perfbench/run.py --workload etl_products --seed 1 --seconds 10 --trace 1
 
 smoke:           ## driver-contract smoke (entry + registry shape)
 	python -c "import importlib.util; \

@@ -36,7 +36,8 @@ from __future__ import annotations
 import argparse
 import json
 import os
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -80,32 +81,34 @@ def load_regions(
 
 
 def build_products(
-    spark: SparkSession, rasters: DataFrame, regions: DataFrame
+    spark: SparkSession,
+    rasters: DataFrame,
+    regions: DataFrame,
+    keep: Callable[[DataFrame], DataFrame],
 ) -> DataFrame:
     """rasters × regions → clipped rasters with stats and product names.
 
     Returns one row per (grid, region) product: raster struct columns +
-    n_cells/min/max/mean + product_name/region_name."""
+    n_cells/min/max/mean + product_name/region_name. ``keep`` (from
+    ``_cache_scope``) caches the clipped rasters, which the stats and the
+    join both read, so the clip kernel runs once."""
     regions = regions.filter(F.col("regc_code") != "99")  # :271–273
 
     fanout = rasters.crossJoin(F.broadcast(regions)).withColumn(
         "base_name", F.concat_ws("#", "base_name", "regc_code")
     )
-    clipped_part = clip_to_polygon(
-        fanout.filter(F.col("wkt").isNotNull()), F.col("wkt")
-    )
-    passthrough = fanout.filter(F.col("wkt").isNull()).select(
-        *clipped_part.columns
-    )
-    clipped = clipped_part.unionByName(passthrough)
+    # a null wkt (the pass-through pseudo-region) leaves the grid unclipped
+    clipped = keep(clip_to_polygon(fanout, F.col("wkt")))
 
     # LEFT join + zero-coalesce: raster_stats drops all-NODATA rasters
     # (its groupBy emits no row), so an inner join would silently lose a
     # region clip that masks every cell — and strict mode would then
     # misattribute the shortfall to unknown parameter/period codes.
     # Fully-masked products surface with n_cells=0 and null min/max/mean.
+    # The stats are one small row per product: broadcast them, so the
+    # cell arrays are never shuffled.
     stats = raster_stats(clipped)
-    with_stats = clipped.join(stats, "base_name", "left").withColumn(
+    with_stats = clipped.join(F.broadcast(stats), "base_name", "left").withColumn(
         "n_cells", F.coalesce(F.col("n_cells"), F.lit(0))
     )
 
@@ -157,8 +160,9 @@ def product_files(products: DataFrame) -> DataFrame:
             out = []
             for row in pdf.to_dict("records"):
                 name = row["product_name"]
+                cells = row["cells"]  # float64 ndarray from Arrow
                 grid = asc_text(
-                    row["width"], row["height"], list(row["cells"]),
+                    row["width"], row["height"], cells,
                     row["xllcorner"], row["yllcorner"], row["cellsize"],
                     row["nodata_value"],
                 )
@@ -168,7 +172,7 @@ def product_files(products: DataFrame) -> DataFrame:
                 tif = geotiff_bytes(
                     int(row["width"]), int(row["height"]),
                     row["xllcorner"], row["yllcorner"], row["cellsize"],
-                    row["nodata_value"], row["crs"], list(row["cells"]),
+                    row["nodata_value"], row["crs"], cells,
                 )
                 stats = json.dumps(
                     {
@@ -233,6 +237,25 @@ def product_metadata(products: DataFrame) -> DataFrame:
     )
 
 
+@contextmanager
+def _cache_scope() -> Iterator[Callable[[DataFrame], DataFrame]]:
+    """Yields ``keep``, which caches a DataFrame until the scope exits;
+    every cache is released on exit, on error too. A leaked cache would
+    serve the next pass over the same folder (an identical plan) stale
+    data."""
+    cached: list[DataFrame] = []
+
+    def keep(df: DataFrame) -> DataFrame:
+        cached.append(df.cache())
+        return df
+
+    try:
+        yield keep
+    finally:
+        for df in cached:
+            df.unpersist()
+
+
 def run(
     spark: SparkSession,
     file_folder: str,
@@ -254,53 +277,53 @@ def run(
     offline contract test (same code path, scheme-dispatched). Unset,
     the upload stage stays manifest-only (URI column + parquet
     manifest), matching a dry run."""
-    rasters = read_asc(spark, file_folder, crs=crs)
-    regions = load_regions(spark, regions_csv, regions_url)
-    products = build_products(spark, rasters, regions).cache()
+    with _cache_scope() as keep:
+        # decoded once: read by the fan-out and by strict mode's count
+        rasters = keep(read_asc(spark, file_folder, crs=crs))
+        regions = load_regions(spark, regions_csv, regions_url)
+        products = keep(build_products(spark, rasters, regions, keep))
+        n_products = products.count()
+        if strict:
+            n_grids = rasters.count()
+            n_regions = regions.filter(F.col("regc_code") != "99").count()
+            if n_products != n_grids * n_regions:
+                raise ValueError(
+                    f"strict mode: {n_grids * n_regions - n_products} grid×region "
+                    "products dropped by unknown parameter/period codes"
+                )
 
-    n_products = products.count()
-    if strict:
-        n_grids = rasters.count()
-        n_regions = regions.filter(F.col("regc_code") != "99").count()
-        if n_products != n_grids * n_regions:
-            raise ValueError(
-                f"strict mode: {n_grids * n_regions - n_products} grid×region "
-                "products dropped by unknown parameter/period codes"
+        zip_dir = output_folder_zipped or os.path.join(output_folder, "zips")
+        n_zips = write_product_zips(product_files(products), zip_dir)
+        n_docs = write_metadata_json(
+            product_metadata(products), output_folder
+        )
+        uploads: list[str] = []
+        n_uploads = 0
+        if bucket_name:
+            # the filesystem IS the uploader on a cluster (s3a committer):
+            # the target URI is a COLUMN (stays distributed — no collect of
+            # every product name to the driver), and the full manifest lands
+            # beside the zips as parquet. The result dict carries a bounded
+            # sample for logging (permissive like :77–92).
+            base = upload_prefix(bucket_name, s3prefix, "")
+            targets = products.select(
+                F.concat(
+                    F.lit(base), F.col("product_name"), F.lit(".zip")
+                ).alias("upload_target")
             )
+            targets.write.mode("overwrite").parquet(
+                os.path.join(output_folder, "_upload_manifest")
+            )
+            n_uploads = n_products
+            uploads = [
+                r["upload_target"]
+                for r in targets.orderBy("upload_target").limit(10).collect()
+            ]
+        upload_result = None
+        if upload_fs_base:
+            from .operators.sinks import upload_artifacts
 
-    zip_dir = output_folder_zipped or os.path.join(output_folder, "zips")
-    n_zips = write_product_zips(product_files(products), zip_dir)
-    n_docs = write_metadata_json(
-        product_metadata(products), output_folder
-    )
-    uploads: list[str] = []
-    n_uploads = 0
-    if bucket_name:
-        # the filesystem IS the uploader on a cluster (s3a committer):
-        # the target URI is a COLUMN (stays distributed — no collect of
-        # every product name to the driver), and the full manifest lands
-        # beside the zips as parquet. The result dict carries a bounded
-        # sample for logging (permissive like :77–92).
-        base = upload_prefix(bucket_name, s3prefix, "")
-        targets = products.select(
-            F.concat(
-                F.lit(base), F.col("product_name"), F.lit(".zip")
-            ).alias("upload_target")
-        )
-        targets.write.mode("overwrite").parquet(
-            os.path.join(output_folder, "_upload_manifest")
-        )
-        n_uploads = n_products
-        uploads = [
-            r["upload_target"]
-            for r in targets.orderBy("upload_target").limit(10).collect()
-        ]
-    upload_result = None
-    if upload_fs_base:
-        from .operators.sinks import upload_artifacts
-
-        upload_result = upload_artifacts(spark, zip_dir, upload_fs_base)
-    products.unpersist()
+            upload_result = upload_artifacts(spark, zip_dir, upload_fs_base)
     return {
         "products": n_products,
         "zips": n_zips,

@@ -1,4 +1,4 @@
-"""Minimal pure-Python GeoTIFF codec (no GDAL, stdlib ``struct`` only).
+"""Minimal GeoTIFF codec (no GDAL: stdlib ``struct``/``zlib`` plus numpy).
 
 The reference shells out to arcpy's CopyRaster for its GeoTIFF sink
 (copy_esrigrid…py:259–261); this image has no GDAL/arcpy, so the sink is
@@ -41,6 +41,8 @@ from __future__ import annotations
 
 import struct
 import zlib
+
+import numpy as np
 
 _II = b"II"  # little-endian byte order mark
 _MAGIC = 42
@@ -235,7 +237,7 @@ def block_mean_downsample(
     nodata_value: float,
     factor: int = 2,
 ) -> tuple[int, int, list[float]]:
-    """Pure-Python twin of operators.raster.downsample_block_mean: each
+    """Per-row twin of operators.raster.downsample_block_mean: each
     output cell is the mean of its factor×factor block's non-nodata
     cells (row-major fold order, matching the JVM ``aggregate``
     expression bit-for-bit); all-nodata blocks stay nodata; edge blocks
@@ -244,23 +246,29 @@ def block_mean_downsample(
     THE SAME pyramid the distributed operator produces."""
     if factor < 2:
         raise ValueError("factor must be >= 2")
-    nw = (width + factor - 1) // factor
-    nh = (height + factor - 1) // factor
-    out = []
-    for br in range(nh):
-        r0, r1 = br * factor, min(height, (br + 1) * factor)
-        for bc in range(nw):
-            c0, c1 = bc * factor, min(width, (bc + 1) * factor)
-            acc, n = 0.0, 0
-            for r in range(r0, r1):
-                base = r * width
-                for c in range(c0, c1):
-                    v = cells[base + c]
-                    if v != nodata_value:
-                        acc += float(v)
-                        n += 1
-            out.append(acc / n if n else float(nodata_value))
-    return nw, nh, out
+    grid = np.asarray(cells, dtype=np.float64).reshape(height, width)
+    out = _block_mean(grid, nodata_value, factor)
+    return out.shape[1], out.shape[0], out.ravel().tolist()
+
+
+def _block_mean(grid: np.ndarray, nodata_value: float, factor: int) -> np.ndarray:
+    """block_mean_downsample on a (height, width) array. The sums are
+    folded one block offset (dr, dc) at a time, row-major, for all
+    blocks at once, so each block adds its valid cells in the order of
+    the JVM ``aggregate`` and the means are bit-identical to it."""
+    height, width = grid.shape
+    nh, nw = -(-height // factor), -(-width // factor)
+    acc = np.zeros((nh, nw))
+    n = np.zeros((nh, nw), dtype=np.int64)
+    for dr in range(factor):
+        for dc in range(factor):
+            sub = grid[dr::factor, dc::factor]
+            part = acc[: sub.shape[0], : sub.shape[1]]
+            valid = sub != nodata_value
+            part[...] = np.where(valid, part + sub, part)
+            n[: sub.shape[0], : sub.shape[1]] += valid
+    with np.errstate(invalid="ignore", divide="ignore"):
+        return np.where(n > 0, acc / n, float(nodata_value))
 
 
 def _tile_grid(width: int, height: int, tile_px: int) -> tuple[int, int]:
@@ -268,31 +276,23 @@ def _tile_grid(width: int, height: int, tile_px: int) -> tuple[int, int]:
 
 
 def _pack_tiles(
-    width: int, height: int, cells: list[float], nodata: float,
-    tile_px: int, compress: bool,
+    grid: np.ndarray, nodata: float, tile_px: int, compress: bool,
 ) -> list[bytes]:
-    """Row-major tiles, each padded with nodata to tile_px×tile_px (the
-    TIFF tile contract: every tile is full-size; readers crop by the
-    image dims), deflate-compressed when asked. Padding is a repeated
-    8-byte pattern, so it deflates to almost nothing."""
+    """Row-major tiles of a (height, width) array, each padded with
+    nodata to tile_px×tile_px (the TIFF tile contract: every tile is
+    full-size; readers crop by the image dims), little-endian float64,
+    deflate-compressed when asked. Padding is a repeated 8-byte
+    pattern, so it deflates to almost nothing."""
+    height, width = grid.shape
     ntx, nty = _tile_grid(width, height, tile_px)
-    pad_row = struct.pack("<d", float(nodata)) * tile_px
+    padded = np.full((nty * tile_px, ntx * tile_px), float(nodata), dtype="<f8")
+    padded[:height, :width] = grid
     tiles = []
     for ty in range(nty):
         for tx in range(ntx):
-            parts = []
-            for dr in range(tile_px):
-                r = ty * tile_px + dr
-                if r >= height:
-                    parts.append(pad_row)
-                    continue
-                c0 = tx * tile_px
-                c1 = min(width, c0 + tile_px)
-                row = struct.pack(f"<{c1 - c0}d", *cells[r * width + c0 : r * width + c1])
-                if c1 - c0 < tile_px:
-                    row += struct.pack("<d", float(nodata)) * (tile_px - (c1 - c0))
-                parts.append(row)
-            raw = b"".join(parts)
+            raw = padded[
+                ty * tile_px : (ty + 1) * tile_px, tx * tile_px : (tx + 1) * tile_px
+            ].tobytes()
             tiles.append(zlib.compress(raw, 6) if compress else raw)
     return tiles
 
@@ -404,7 +404,7 @@ def encode_cog(
     cellsize: float,
     nodata_value: float,
     crs: str | None,
-    cells: list[float],
+    cells: list[float] | np.ndarray,
     tile_px: int | None = None,
     levels: int | None = None,
     compress: bool = True,
@@ -451,8 +451,9 @@ def encode_cog(
         )
 
     # ---- overview pyramid (finest -> coarsest) ----
-    pyramid: list[tuple[int, int, float, list[float]]] = []
-    w, h, cs, cv = width, height, float(cellsize), cells
+    grid = np.asarray(cells, dtype=np.float64).reshape(height, width)
+    pyramid: list[tuple[int, int, float, np.ndarray]] = []
+    w, h, cs, cv = width, height, float(cellsize), grid
     n_levels = 0
     while True:
         if levels is None:
@@ -462,16 +463,17 @@ def encode_cog(
                 break
         elif n_levels >= levels:
             break
-        w, h, cv = block_mean_downsample(w, h, cv, nodata_value, 2)
+        cv = _block_mean(cv, nodata_value, 2)
+        h, w = cv.shape
         cs *= 2.0
         pyramid.append((w, h, cs, cv))
         n_levels += 1
 
     comp = _COMP_DEFLATE if compress else _COMP_NONE
-    all_levels = [(width, height, float(cellsize), cells)] + pyramid
+    all_levels = [(width, height, float(cellsize), grid)] + pyramid
     tiles_per_level = [
-        _pack_tiles(lw, lh, lcv, nodata_value, tile_px, compress)
-        for (lw, lh, _, lcv) in all_levels
+        _pack_tiles(lcv, nodata_value, tile_px, compress)
+        for (_, _, _, lcv) in all_levels
     ]
 
     # every pyramid level shares the full-resolution TOP edge (see

@@ -8,8 +8,9 @@ as composable DataFrame transformations:
 - ``clip_to_bbox``: extent clip with shrink-to-geometry
   (NO_MAINTAIN_EXTENT, :309) in pure JVM array expressions.
 - ``clip_to_polygon``: ClippingGeometry semantics (:307) — cell-center-
-  in-polygon masking to NODATA (the engine's defined clip contract,
-  SURVEY §7 hard-part 1) via an Arrow-batched pandas UDF.
+  in-polygon masking to NODATA at the input extent (the engine's
+  defined clip contract, SURVEY §7 hard-part 1) via an Arrow-batched
+  pandas UDF.
 - ``resample_nearest``: cellSize="MINOF" resampling analogue (:300) in
   JVM expressions (nearest-neighbor decimation/replication).
 - ``encode_geotiff``: the GeoTIFF sink boundary (:259–261) — a real
@@ -36,7 +37,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.geometry import parse_wkt_polygon, points_in_polygon
+from ..functions.geometry import grid_in_polygon, parse_wkt_polygon
 from ..sources.asc import RASTER_SCHEMA
 
 
@@ -137,36 +138,39 @@ def clip_to_bbox(
 
 
 def clip_to_polygon(rasters: DataFrame, wkt_col: Column | str) -> DataFrame:
-    """ClippingGeometry semantics: mask cells whose centers fall outside
-    the polygon to NODATA, then shrink the extent to the polygon's bbox.
+    """ClippingGeometry semantics: cells whose centers fall outside the
+    polygon become NODATA. The extent is kept: width, height and corner
+    are the input's, so every product of one grid shares its grid. A
+    row whose WKT is null passes through unchanged.
 
-    The point-in-polygon test is an Arrow-batched pandas UDF over the
-    cells array; everything around it stays columnar.
+    The mask is an Arrow-batched pandas UDF: one scanline point-in-
+    polygon pass per raster (``grid_in_polygon``); everything around it
+    stays columnar. Output: the raster struct columns (RASTER_SCHEMA).
     """
-    wkt = _col(wkt_col)
-    with_poly = rasters.withColumn("_wkt", wkt)
+    with_poly = rasters.withColumn("_wkt", _col(wkt_col))
+    names = [f.name for f in RASTER_SCHEMA]
 
     def mask(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            out_rows = []
-            # dict records, not itertuples: pandas mangles leading-
-            # underscore field names in namedtuples.
-            for row in pdf.to_dict("records"):
-                rings = parse_wkt_polygon(row["_wkt"])
-                w, h, cs = row["width"], row["height"], row["cellsize"]
-                ytop = row["yllcorner"] + h * cs
-                cc, rr = np.meshgrid(np.arange(w), np.arange(h))
-                xs = row["xllcorner"] + (cc.ravel() + 0.5) * cs
-                ys = ytop - (rr.ravel() + 0.5) * cs
-                inside = points_in_polygon(xs, ys, rings)
-                cells = np.asarray(row["cells"], dtype=np.float64)
-                row["cells"] = np.where(inside, cells, row["nodata_value"]).tolist()
-                del row["_wkt"]
-                out_rows.append(row)
-            yield pd.DataFrame(out_rows)
+            cells_out = []
+            for wkt, w, h, xll, yll, cs, nodata, cells in zip(
+                pdf["_wkt"], pdf["width"], pdf["height"], pdf["xllcorner"],
+                pdf["yllcorner"], pdf["cellsize"], pdf["nodata_value"],
+                pdf["cells"],
+            ):
+                if pd.isna(wkt):
+                    cells_out.append(cells)
+                    continue
+                ytop = yll + h * cs
+                xs = xll + (np.arange(w) + 0.5) * cs
+                ys = ytop - (np.arange(h) + 0.5) * cs
+                inside = grid_in_polygon(xs, ys, parse_wkt_polygon(wkt))
+                cells_out.append(np.where(inside.ravel(), cells, nodata))
+            out = pdf[names].copy()
+            out["cells"] = cells_out
+            yield out
 
-    masked = with_poly.mapInPandas(mask, RASTER_SCHEMA)
-    return masked
+    return with_poly.mapInPandas(mask, RASTER_SCHEMA)
 
 
 def resample_nearest(rasters: DataFrame, factor: int) -> DataFrame:

@@ -27,6 +27,10 @@ from collections.abc import Iterator
 
 from pyspark.sql import DataFrame
 
+# every zip member's timestamp: the zip format's earliest date, so archives
+# do not depend on when they were written
+_ZIP_EPOCH = (1980, 1, 1, 0, 0, 0)
+
 
 def write_product_zips(
     files: DataFrame,
@@ -39,7 +43,8 @@ def write_product_zips(
 
     Input: one row per sidecar file with its bytes. Lock files are
     excluded (copy_esrigrid…py:331–333). Files are zipped in sorted-path
-    order so archives are byte-reproducible. Returns #zips written.
+    order with a fixed timestamp and fixed permissions, so the same rows
+    give byte-identical archives. Returns #zips written.
 
     Scale shape: ``repartition(name_col)`` co-locates every sidecar of a
     product on one executor; each partition then zips its products
@@ -66,7 +71,11 @@ def write_product_zips(
                     zipfile.ZIP_DEFLATED,
                 )
                 n += 1
-            zf.writestr(os.path.basename(row[path_col]), bytes(row[content_col]))
+            member = zipfile.ZipInfo(os.path.basename(row[path_col]), _ZIP_EPOCH)
+            member.compress_type = zipfile.ZIP_DEFLATED
+            member.create_system = 3  # unix, so the mode below is read
+            member.external_attr = 0o100644 << 16  # regular file, rw-r--r--
+            zf.writestr(member, bytes(row[content_col]))
         if zf is not None:
             zf.close()
         yield n

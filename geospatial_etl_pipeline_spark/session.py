@@ -10,6 +10,9 @@ every setting is chosen to survive a 1000-executor cluster:
 - Arrow enabled so any pandas-UDF path is vectorized batch transfer.
 - Session timezone pinned to UTC so timestamp semantics match the DuckDB
   oracle and are cluster-invariant.
+- Python workers fork from the package's own daemon module
+  (``worker_daemon``), which stops every task from re-reading
+  ``pyspark.zip``'s directory when the archive has not changed.
 """
 
 from __future__ import annotations
@@ -31,6 +34,7 @@ def get_spark(app_name: str = "geospatial-etl-pipeline-spark") -> SparkSession:
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        .config("spark.python.daemon.module", f"{__package__}.worker_daemon")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
         .config("spark.ui.enabled", "false")
     )

@@ -25,6 +25,7 @@ from __future__ import annotations
 import os
 from collections.abc import Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import (
@@ -130,19 +131,19 @@ def read_asc(
     return binf.mapInPandas(decode, RASTER_SCHEMA)
 
 
-def asc_text(width: int, height: int, cells: list[float],
+def asc_text(width: int, height: int, cells: list[float] | np.ndarray,
              xll: float = 0.0, yll: float = 0.0, cellsize: float = 1.0,
              nodata: float = -9999.0) -> str:
     """Esri ASCII grid encoding of one raster (the inverse of
     parse_asc_bytes) — used by the CLI sink to emit clipped grids."""
+    if isinstance(cells, np.ndarray):
+        cells = cells.tolist()  # Python floats: str() per cell is cheap
     lines = [
         f"ncols {width}\nnrows {height}\nxllcorner {xll}\n"
         f"yllcorner {yll}\ncellsize {cellsize}\nNODATA_value {nodata}\n"
     ]
     for r in range(height):
-        lines.append(
-            " ".join(str(v) for v in cells[r * width : (r + 1) * width]) + "\n"
-        )
+        lines.append(" ".join(map(str, cells[r * width : (r + 1) * width])) + "\n")
     return "".join(lines)
 
 

@@ -84,3 +84,73 @@ def test_cli_passthrough_without_regions(spark, io_dirs):
     result = cli.run(spark, str(src), out2)
     assert result["products"] == 2  # one pseudo-region, no clip
     assert result["zips"] == 2
+
+
+def _executed_operators(spark, plan) -> list:
+    """Every operator instance that runs when ``plan`` (executed) runs: a
+    cached relation's plan counts once however many scans read it,
+    adaptive plans contribute their final plan, reused exchanges nothing."""
+    jvm = spark.sparkContext._jvm
+    seen: set[int] = set()
+    out: list = []
+
+    def walk(node):
+        cls = node.getClass().getSimpleName()
+        if cls == "AdaptiveSparkPlanExec":
+            return walk(node.executedPlan())
+        if cls.endswith("QueryStageExec"):
+            return walk(node.plan())
+        out.append(node)
+        if cls == "InMemoryTableScanExec":
+            builder = node.relation().cacheBuilder()
+            key = jvm.System.identityHashCode(builder)
+            if key not in seen:
+                seen.add(key)
+                walk(builder.cachedPlan())
+            return
+        children = node.children()
+        for i in range(children.size()):
+            walk(children.apply(i))
+
+    walk(plan)
+    return out
+
+
+def test_build_products_runs_each_kernel_once(spark, io_dirs, tmp_path):
+    """Products built the way cli.run builds them decode and mask once
+    each: no clip/pass-through Union, and the stats join is a broadcast,
+    so no exchange carries the cell arrays. A null-WKT region passes
+    through the same mask kernel unclipped."""
+    src, _, _ = io_dirs
+    regions_csv = tmp_path / "regions.csv"
+    regions_csv.write_text(
+        "regc_code,region_name_ascii,wkt\n"
+        '01,Northland Region,"POLYGON((0 0, 10 0, 10 6, 0 6, 0 0))"\n'
+        "02,Auckland Region,\n"
+    )
+    with cli._cache_scope() as keep:
+        rasters = keep(cli.read_asc(spark, str(src)))
+        regions = cli.load_regions(spark, str(regions_csv))
+        products = keep(cli.build_products(spark, rasters, regions, keep))
+        rows = {r["product_name"]: r for r in products.collect()}
+        ops = _executed_operators(spark, products._jdf.queryExecution().executedPlan())
+
+    names = [op.nodeName() for op in ops]
+    kernels = sorted(
+        op.toString().split("(")[0].split()[-1] for op in ops
+        if op.nodeName() == "MapInPandas"
+    )
+    assert kernels == ["decode", "mask"], kernels
+    assert "Union" not in names
+    shuffled = [
+        op.output().toString() for op in ops
+        if op.getClass().getSimpleName() == "ShuffleExchangeExec"
+    ]
+    assert not any("cells#" in cols for cols in shuffled), shuffled
+
+    assert len(rows) == 4
+    for name, row in rows.items():
+        if name.endswith("_Auckland"):
+            assert row["n_cells"] == 100  # passed through unmasked
+        else:
+            assert 0 < row["n_cells"] < 100

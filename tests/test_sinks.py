@@ -42,6 +42,24 @@ def test_write_product_zips_idempotent(spark, tmp_path):
     assert zipfile.ZipFile(f"{out}/p.zip").read("p.asc") == b"v2"
 
 
+def test_write_product_zips_byte_reproducible(spark, tmp_path):
+    df = spark.createDataFrame(
+        [("p", "/x/p.tif", b"tif" * 100), ("p", "/x/p.asc", b"1.0 2.0\n")],
+        ["base_name", "path", "content"],
+    )
+    archives = []
+    for out in ("first", "second"):
+        assert write_product_zips(df, str(tmp_path / out)) == 1
+        archives.append((tmp_path / out / "p.zip").read_bytes())
+    assert archives[0] == archives[1]
+    # fixed, not merely equal because both writes fell in one 2 s tick
+    with zipfile.ZipFile(tmp_path / "first" / "p.zip") as zf:
+        infos = zf.infolist()
+    assert [i.filename for i in infos] == ["p.asc", "p.tif"]
+    assert {i.date_time for i in infos} == {(1980, 1, 1, 0, 0, 0)}
+    assert {i.external_attr >> 16 for i in infos} == {0o100644}
+
+
 def test_write_metadata_json_pretty(spark, tmp_path):
     df = spark.createDataFrame(
         [("prod_a", json.dumps({"src": "x", "metadata": {"title": "prod_a"}}))],
